@@ -5,13 +5,27 @@ Two execution shapes:
 1. **Batch-checked** (rows 58-60, 62-64): the pure transform from
    transforms.py applied to the batch events table — the DuckDB oracle
    validates the streaming semantics exactly (SURVEY.md §5.2.4).
-2. **Streaming-executed** (rows 61, 65-66): a real ``readStream`` job run
-   with ``Trigger.AvailableNow`` inside the query function — micro-batch
-   planning, state stores, and sink commit protocol all engaged.  Where the
-   final state is deterministic (complete-mode agg, idempotent foreachBatch
-   sink) the oracle still checks it exactly; the watermark query is
-   rows-only (drop set depends on batch boundaries; the replay harness in
-   tests/test_streaming.py pins it down).
+2. **Streaming-executed** (rows 61, 65-66 and the incremental twins): a
+   real ``readStream`` job run with ``Trigger.AvailableNow`` inside the
+   query function — micro-batch planning, state stores, and sink commit
+   protocol all engaged.  Where the final state is deterministic
+   (complete-mode agg, idempotent foreachBatch sink) the oracle still
+   checks it exactly; the watermark query is rows-only (drop set depends
+   on batch boundaries; the replay harness in tests/test_streaming.py
+   pins it down).
+
+Every streaming-executed query runs through ONE path.
+``_run_available_now`` is the only start/await: fresh checkpoint,
+AvailableNow trigger, state partitions sized from the backlog
+(``_state_shuffle_scope``).  ``_replay`` wraps it for the foreachBatch
+queries: it owns the temp sink and checkpoint, lands each micro-batch
+with a writer (by default the rows stamped with their ``batch_id`` under
+``sink/batch=<id>``), and returns the query's read-back detached by an
+eager local checkpoint; ``_latest_snapshot`` is the shared per-key
+"newest batch wins" merge of the stateful folds.  ``_run_to_memory``,
+the rollup and the CDC loop start their streams through the same core.
+Every temp dir, checkpoint and memory-sink view a run creates is removed
+in a ``finally``, so a failed micro-batch leaks nothing into the session.
 
 Spark 4's ``transformWithStateInPandas`` (the successor to
 applyInPandasWithState: named typed state, timers) was evaluated for the
@@ -29,9 +43,11 @@ import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..core.numeric import dsum_sql, measure
 from ..core.registry import query
@@ -254,52 +270,31 @@ def _dir_bytes(path: str) -> int:
 @contextmanager
 def _state_shuffle_scope(spark: SparkSession, backlog_bytes: int | None = None):
     """Scope ``spark.sql.shuffle.partitions`` to the lifetime of ONE
-    stream run (r12, guide §2.2).
+    stream run.
 
-    Streaming stages have no AQE (Spark disables it for stateful
-    workloads), so a stateful stream mints exactly
+    Streaming stages have no AQE, so a stateful stream mints exactly
     ``spark.sql.shuffle.partitions`` state-store partitions at checkpoint
-    birth and schedules that many tasks — each a state-store open +
-    delta-file commit (and, for the pandas folds, an Arrow worker
-    round-trip) — EVERY micro-batch.  Inheriting the session's batch
-    constant is the wrong number at both ends (Spark's default 200 on an
-    untuned session: measured 14.4 s for the heavy-hitters stream at
-    sf0.01 vs 3.5 s at 32 vs 1.8 s at 8 — pure task scheduling on a toy
-    batch; a fixed small number would starve a real cluster).
+    birth and schedules that many tasks — each a state-store open and
+    delta-file commit — EVERY micro-batch.  The session's batch constant
+    is the wrong number at both ends: Spark's default 200 turns a small
+    replay into pure task scheduling, and a small fixed number would
+    starve a real cluster.
 
-    Sizing (r13, guide §2.2 "derive partitioning from input size"): these
-    are ``Trigger.AvailableNow`` REPLAY runs, so the total backlog is
-    known up front — callers pass its on-disk size and the partition
-    count becomes ``clamp(backlog / advisoryPartitionSizeInBytes, 1,
-    defaultParallelism)``: exactly the coalescing AQE would do for a
-    batch shuffle of the same bytes, applied by hand because streaming
-    has no AQE.  At 100 TB the clamp binds at defaultParallelism (the r12
-    behavior, growing with the cluster); at audit scale it stops minting
-    32 state stores for a 2 MB backlog (measured: addBatch is ~linear in
-    the partition count, ~60-80 ms of pure per-partition overhead).
-    Callers with no known backlog (a genuinely unbounded stream) pass
-    None and get defaultParallelism; deployments with hotter key
-    cardinality set ``spark.mu_swarm.stream.statePartitions`` explicitly
-    — the explicit conf always wins.
-    Applies only to NEW checkpoints — Spark pins the count inside an
-    existing checkpoint lineage (all checkpoints here are fresh mkdtemp).
-    Conf restored in ``finally`` — the rollup partition-overwrite-mode
-    leak (fixed earlier this round) is the cautionary tale for scoped
-    session conf.
+    An AvailableNow replay knows its total backlog up front, so the count
+    is ``clamp(backlog / advisoryPartitionSizeInBytes, 1,
+    defaultParallelism)`` — the coalescing AQE would apply to a batch
+    shuffle of the same bytes.  An unknown backlog (None) gets
+    defaultParallelism.  The count applies only to NEW checkpoints (Spark
+    pins it inside an existing lineage; every checkpoint here is fresh),
+    and the prior value is restored in ``finally``.
 
-    SERIAL-EXECUTION ASSUMPTION (r12 ADVICE): this mutates the
-    session-global ``spark.sql.shuffle.partitions`` for the stream run's
-    lifetime — safe under the serial grading driver and the serial
-    bench/test harnesses, but a BATCH query planned concurrently in the
-    same session would pick up the streaming value.  If concurrent use
-    ever becomes a supported mode, scope via a cloned session
-    (``spark.newSession()``) instead."""
+    The conf is session-global while the stream runs: a batch query
+    planned concurrently in the same session would pick up the streaming
+    value.  If concurrent use becomes a supported mode, scope via a cloned
+    session (``spark.newSession()``) instead."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    explicit = spark.conf.get("spark.mu_swarm.stream.statePartitions", None)
-    if explicit is not None:
-        target = explicit
-    elif backlog_bytes is not None:
+    if backlog_bytes is not None:
         advisory = _parse_bytes(spark.conf.get(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
         n_par = spark.sparkContext.defaultParallelism
@@ -313,31 +308,88 @@ def _state_shuffle_scope(spark: SparkSession, backlog_bytes: int | None = None):
         spark.conf.set(key, prev)
 
 
+@contextmanager
+def _temp_dirs(*prefixes: str):
+    """Fresh temp dirs, one per prefix, removed on exit whether the body
+    succeeds or raises."""
+    dirs = [tempfile.mkdtemp(prefix=p) for p in prefixes]
+    try:
+        yield dirs
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def _run_available_now(spark: SparkSession, writer: DataStreamWriter,
+                       ckpt: str, backlog_bytes: int | None) -> None:
+    """Drain the source's current backlog through ``writer`` and block
+    until done: ``Trigger.AvailableNow`` on a fresh checkpoint, with state
+    partitions sized from the backlog.  Every stream in this module starts
+    and waits here."""
+    with _state_shuffle_scope(spark, backlog_bytes):
+        (writer.option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start().awaitTermination())
+
+
 def _run_to_memory(df: DataFrame, output_mode: str,
                    backlog_bytes: int | None = None) -> DataFrame:
-    """Run a streaming DF to a memory sink with AvailableNow; return the
-    final table as a batch DataFrame."""
-    name = f"t_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    with _state_shuffle_scope(df.sparkSession, backlog_bytes):
-        q = (
-            df.writeStream.format("memory").queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Run a streaming DF to a memory sink; return the final table as a
+    batch DataFrame.  The sink's uniquely-named temp view is dropped on
+    success and failure alike — a registered view pins the sink's rows
+    for the session's lifetime; the local checkpoint owns them."""
     spark = df.sparkSession
-    out = spark.table(name).localCheckpoint(eager=True)  # detach from sink
-    # Drop the sink's temp view (r13, guide §5): each run minted a
-    # uniquely-named memory-sink table that stayed registered for the
-    # session's lifetime, pinning the sink's collected rows — a marathon
-    # session leaked one result-sized block per stream run.  The
-    # checkpoint above owns the data now.
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    name = f"t_{uuid.uuid4().hex[:12]}"
+    with _temp_dirs("spark_graft_ckpt_") as (ckpt,):
+        try:
+            _run_available_now(
+                spark,
+                df.writeStream.format("memory").queryName(name)
+                .outputMode(output_mode),
+                ckpt, backlog_bytes)
+            return spark.table(name).localCheckpoint(eager=True)
+        finally:
+            spark.catalog.dropTempView(name)
+
+
+def _write_batch(sink: str, bdf: DataFrame, batch_id: int) -> None:
+    """Overwrite ``sink/batch=<id>`` with ``bdf``: a retried micro-batch
+    replaces its own output, so the sink is idempotent under retries."""
+    bdf.write.mode("overwrite").parquet(
+        os.path.join(sink, f"batch={batch_id}"))
+
+
+def _stamp_batch(sink: str, bdf: DataFrame, batch_id: int) -> None:
+    """Default replay writer: the batch's rows stamped with ``batch_id``."""
+    _write_batch(sink, bdf.withColumn("batch_id", F.lit(batch_id)), batch_id)
+
+
+def _replay(stream: DataFrame, read, backlog_bytes: int | None,
+            write=_stamp_batch, *, output_mode: str = "append",
+            ckpt_prefix: str = "spark_graft_ckpt_") -> DataFrame:
+    """Replay ``stream`` through ``foreachBatch`` into a temp sink and
+    return ``read(sink)`` detached by an eager local checkpoint.
+
+    ``write(sink, batch_df, batch_id)`` lands one micro-batch.  Sink and
+    checkpoint are temp dirs removed whether the run succeeds or fails;
+    ``ckpt_prefix`` lets a versioned state schema ride the checkpoint
+    path."""
+    with _temp_dirs("spark_graft_sink_", ckpt_prefix) as (sink, ckpt):
+        _run_available_now(
+            stream.sparkSession,
+            stream.writeStream.outputMode(output_mode)
+            .foreachBatch(partial(write, sink)),
+            ckpt, backlog_bytes)
+        return read(sink).localCheckpoint(eager=True)
+
+
+def _latest_snapshot(spark: SparkSession, sink: str, key: str) -> DataFrame:
+    """Each ``key``'s rows from its LATEST batch in a stamped sink: an
+    update-mode fold emits only the keys a batch touched, so a key's
+    current state is the snapshot with its highest batch_id."""
+    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
+    return (snaps.withColumn("mx", F.max("batch_id").over(
+                Window.partitionBy(key)))
+            .filter(F.col("batch_id") == F.col("mx")))
 
 
 @query("q_stream_output_modes", oracle=_TUMBLING_SQL)
@@ -382,32 +434,17 @@ def q_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mode=overwrite → idempotent under retries); reading the sink back and
     re-aggregating must reproduce the batch answer exactly.
     """
-    sink = tempfile.mkdtemp(prefix="spark_graft_febsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.write.mode("overwrite").parquet(os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            X.stream_events(spark, sf_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read(sink: str) -> DataFrame:
+        return (
+            spark.read.parquet(os.path.join(sink, "batch=*"))
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(measure(F.col("value")).cast("decimal(27,6)"))
+                 .cast("double").alias("sum_value"))
         )
-        q.awaitTermination()
-    back = spark.read.parquet(os.path.join(sink, "batch=*"))
-    out = (
-        back.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(measure(F.col("value")).cast("decimal(27,6)"))
-             .cast("double").alias("sum_value"))
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+
+    return _replay(X.stream_events(spark, sf_dir, max_files_per_trigger=1),
+                   read, _events_backlog_bytes(sf_dir), _write_batch)
 
 
 # The rollup store's declared layout (class K: an all-empty-batch run
@@ -425,32 +462,16 @@ def rollup_upsert(spark: SparkSession, store: str):
     so a retried batch converges instead of double-counting (directly
     exercised by tests/test_streaming.py's replay-retry test).
 
-    HARD REQUIREMENT enforced here, not at the call site: the session must
-    have ``spark.sql.sources.partitionOverwriteMode=dynamic``.  Under the
-    default (static) mode the ``mode("overwrite")`` below would wipe EVERY
-    ``event_date`` partition of the store, not just the days in the batch —
-    silently deleting untouched days.  Each upsert call re-checks the conf
-    (it is session-mutable) and refuses to write rather than corrupt."""
-
-    def _require_dynamic_overwrite() -> None:
-        mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        if mode.lower() != "dynamic":
-            raise RuntimeError(
-                "rollup_upsert requires "
-                "spark.sql.sources.partitionOverwriteMode=dynamic "
-                f"(got {mode!r}); refusing to overwrite the rollup store — "
-                "static mode would delete day-partitions the batch didn't "
-                "touch."
-            )
+    The store write pins DYNAMIC partition overwrite on its own writer, so
+    it rewrites only the days in the batch whatever the session's
+    ``partitionOverwriteMode`` is: a static overwrite would delete every
+    day-partition the batch did not touch."""
 
     def upsert(bdf: DataFrame, batch_id: int) -> None:
-        _require_dynamic_overwrite()
         # Eager-checkpoint the sketch-sized partial: it is consumed TWICE
         # per batch (the touched-days collect and the merged write) and
-        # would otherwise re-aggregate the whole batch for each (r13,
-        # guide §1.2); unpersisted right after the write — the merged
-        # store owns the rows from then on (guide §5).
+        # would otherwise re-aggregate the whole batch for each; unpersisted
+        # right after the write — the merged store owns the rows from then on.
         part = (
             bdf.groupBy(
                 F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
@@ -476,8 +497,9 @@ def rollup_upsert(spark: SparkSession, store: str):
             except Exception:  # first batch: store doesn't exist yet
                 merged = part
             (merged.repartition("event_date")
-             .write.mode("overwrite").partitionBy("event_date")
-             .parquet(store))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("event_date").parquet(store))
         finally:
             unpersist_cp(part)
 
@@ -506,72 +528,42 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-exact.  At 100 TB the store stays one row per
     (day, hour, type, batch) and each trigger touches only the days in
     that batch — never a full-store rewrite."""
-    run = uuid.uuid4().hex[:8]
-    src = tempfile.mkdtemp(prefix=f"spark_graft_rollup_src_{run}_")
-    store = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_rollup_store_{run}")
-    ckpt = tempfile.mkdtemp(prefix=f"spark_graft_rollup_ckpt_{run}_")
-
-    # Stage the source as TWO file groups so the rollup genuinely
-    # increments across micro-batches (maxFilesPerTrigger=1 → ≥2
-    # triggers).  ONE pass (r13, guide §1.2 "don't compute things
-    # twice"): partitionBy(half) writes both halves from a single scan —
-    # the previous two filtered writes each re-scanned events.  The
-    # written files carry exactly ev's columns (the half partition
-    # column stays in the directory name), and the stream reads the
-    # half=* glob with ev's schema, so batch contents are unchanged.
     from ..core.tables import observed_time
-    ev = observed_time(load(spark, sf_dir, "events"))  # class I: the
-    # store is day-partitioned — an unstamped row has no partition
-    (ev.withColumn("half", F.col("event_id") % 2)
-     .write.mode("overwrite")  # mkdtemp pre-created (empty) src
-     .option("partitionOverwriteMode", "static")
-     .partitionBy("half").parquet(src))
 
-    # Session-mutable conf: set dynamic for the upsert's partition-scoped
-    # overwrites, but RESTORE the prior value afterwards — leaking
-    # dynamic mode into the shared session makes every later fixed-path
-    # ``mode("overwrite").partitionBy(...)`` of an EMPTY source rewrite
-    # zero partitions and silently serve stale data (found r12: flaky
-    # q_sink_triples empty-facts parity).
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        schema = ev.schema
-        upsert = rollup_upsert(spark, store)
-        # class K: pre-seed the store so it exists (with zero partitions)
-        # even when every micro-batch is empty and the upsert never writes.
+    with _temp_dirs("spark_graft_rollup_src_", "spark_graft_rollup_store_",
+                    "spark_graft_rollup_ckpt_") as (src, store, ckpt):
+        # Stage the source as TWO file groups in one pass, so the rollup
+        # genuinely increments across micro-batches (maxFilesPerTrigger=1
+        # → ≥2 triggers).  The files carry exactly ev's columns (``half``
+        # stays in the directory name) and the stream reads them with
+        # ev's schema.
+        ev = observed_time(load(spark, sf_dir, "events"))  # class I: the
+        # store is day-partitioned — an unstamped row has no partition
+        (ev.withColumn("half", F.col("event_id") % 2)
+         .write.mode("overwrite")  # mkdtemp pre-created (empty) src
+         .option("partitionOverwriteMode", "static")
+         .partitionBy("half").parquet(src))
+        # class K: seed the store with its declared layout so the
+        # read-back works even when every micro-batch is empty and the
+        # upsert never writes.
         (spark.createDataFrame([], ROLLUP_STORE_SCHEMA)
          .write.mode("overwrite").partitionBy("event_date").parquet(store))
-
-        with _state_shuffle_scope(spark, _dir_bytes(src)):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(os.path.join(src, "half=*"))
-                .writeStream.foreachBatch(upsert)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = (
+        _run_available_now(
+            spark,
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(src, "half=*"))
+            .writeStream.foreachBatch(rollup_upsert(spark, store)),
+            ckpt, _dir_bytes(src))
+        return (
             spark.read.schema(ROLLUP_STORE_SCHEMA).parquet(store)
             .groupBy("event_date", "hour", "event_type")
             .agg(F.sum("n").cast("long").alias("n"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode)
-    for d in (src, store, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
-
-from ..operators.analytics import EVENT_FINGERPRINT_ORACLE_SQL
+from ..operators.analytics import EVENT_FINGERPRINT_ORACLE_SQL  # noqa: E402
 
 
 @query("q_stream_fingerprint", oracle=EVENT_FINGERPRINT_ORACLE_SQL)
@@ -592,40 +584,26 @@ def q_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.analytics import event_row_fingerprint
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_fpsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_fpckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        part = (
+    def write(sink: str, bdf: DataFrame, batch_id: int) -> None:
+        _write_batch(sink, (
             bdf.select(F.date_format("ts", "yyyy-MM-dd").alias("day"),
                        event_row_fingerprint().alias("rh"))
             .groupBy("day")
             .agg(F.count(F.lit(1)).alias("n_part"),
                  F.sum(F.col("rh").cast("decimal(38,0)")).alias("fp_part"))
-        )
-        part.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch={batch_id}"))
+        ), batch_id)
 
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            X.stream_events(spark, sf_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read(sink: str) -> DataFrame:
+        return (
+            spark.read.parquet(os.path.join(sink, "batch=*"))
+            .groupBy("day")
+            .agg(F.sum("n_part").cast("long").alias("n_rows"),
+                 F.sum("fp_part").cast("decimal(38,0)").cast("string")
+                 .alias("fingerprint"))
         )
-        q.awaitTermination()
-    back = spark.read.parquet(os.path.join(sink, "batch=*"))
-    out = (
-        back.groupBy("day")
-        .agg(F.sum("n_part").cast("long").alias("n_rows"),
-             F.sum("fp_part").cast("decimal(38,0)").cast("string")
-             .alias("fingerprint"))
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+
+    return _replay(X.stream_events(spark, sf_dir, max_files_per_trigger=1),
+                   read, _events_backlog_bytes(sf_dir), write)
 
 
 @query("q_stream_heavy_hitters")
@@ -646,45 +624,19 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     MG has no DuckDB twin); tests/test_streaming.py replays multi-batch
     and asserts the final state equals the batch sketch EXACTLY (same
     per-shard fold order), plus the MG guarantee against exact counts."""
-    from .stateful import mg_sketch_stateful
-
-    sink = tempfile.mkdtemp(prefix="spark_graft_mgsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_mgckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            mg_sketch_stateful(X.stream_events(spark, sf_dir,
-                                               max_files_per_trigger=1))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
-
     from ..operators.sketches import mg_merge
+    from .stateful import MG_SNAPSHOT_SENTINEL, mg_sketch_stateful
 
-    from .stateful import MG_SNAPSHOT_SENTINEL
+    def read(sink: str) -> DataFrame:
+        return mg_merge(
+            _latest_snapshot(spark, sink, "shard")
+            .filter(F.col("item") != MG_SNAPSHOT_SENTINEL)
+            .select("shard", "item", "est"))
 
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("shard")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter(F.col("item") != MG_SNAPSHOT_SENTINEL)
-        .select("shard", "item", "est")
-    )
-    out = mg_merge(latest).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _replay(
+        mg_sketch_stateful(
+            X.stream_events(spark, sf_dir, max_files_per_trigger=1)),
+        read, _events_backlog_bytes(sf_dir), output_mode="update")
 
 
 from ..operators.timeseries import HOLT_ORACLE_SQL  # noqa: E402
@@ -712,51 +664,26 @@ def q_stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeseries import _HOLT_ALPHA, _HOLT_BETA
     from .stateful import holt_stateful
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_holtsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_holtckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            holt_stateful(X.stream_events(spark, sf_dir,
-                                          max_files_per_trigger=1)
-                          .filter(F.col('event_type').isNotNull()))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read(sink: str) -> DataFrame:
+        a, bb = _HOLT_ALPHA, _HOLT_BETA
+        y = F.col("pending_n").cast("double")
+        first = F.col("n_complete") == 0
+        level = F.when(first, y).otherwise(
+            a * y + (1 - a) * (F.col("l") + F.col("b")))
+        trend = F.when(first, F.lit(0.0)).otherwise(
+            bb * (level - F.col("l")) + (1 - bb) * F.col("b"))
+        return _latest_snapshot(spark, sink, "event_type").select(
+            "event_type",
+            (F.col("n_complete") + 1).cast("long").alias("n_hours"),
+            level.alias("level"),
+            trend.alias("trend"),
+            (level + trend).alias("forecast_next"),
         )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
 
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("event_type")))
-        .filter(F.col("batch_id") == F.col("mx"))
-    )
-    a, bb = _HOLT_ALPHA, _HOLT_BETA
-    y = F.col("pending_n").cast("double")
-    first = F.col("n_complete") == 0
-    level = F.when(first, y).otherwise(
-        a * y + (1 - a) * (F.col("l") + F.col("b")))
-    trend = F.when(first, F.lit(0.0)).otherwise(
-        bb * (level - F.col("l")) + (1 - bb) * F.col("b"))
-    out = latest.select(
-        "event_type",
-        (F.col("n_complete") + 1).cast("long").alias("n_hours"),
-        level.alias("level"),
-        trend.alias("trend"),
-        (level + trend).alias("forecast_next"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _replay(
+        holt_stateful(X.stream_events(spark, sf_dir, max_files_per_trigger=1)
+                      .filter(F.col('event_type').isNotNull())),
+        read, _events_backlog_bytes(sf_dir), output_mode="update")
 
 
 from ..operators.sketches import _KMV_SQL  # noqa: E402
@@ -785,17 +712,13 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches and asserts merge ≡ one-shot exactly."""
     from ..operators.sketches import kmv_bottomk, kmv_finalize, kmv_priority
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_kmvsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_kmvckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
+    def write(sink: str, bdf: DataFrame, batch_id: int) -> None:
         b = bdf.select("event_type", "event_id").persist()
-        kmv_bottomk(
+        _write_batch(os.path.join(sink, "kmv"), kmv_bottomk(
             b.select("event_type", kmv_priority().alias("pri")),
             ["event_type"],
-        ).write.mode("overwrite").parquet(
-            os.path.join(sink, f"kmv/batch={batch_id}"))
-        (
+        ), batch_id)
+        _write_batch(os.path.join(sink, "bitmap"), (
             b.select(
                 "event_type",
                 F.expr("event_id div 60").cast("long").alias("word"),
@@ -803,36 +726,25 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("event_type", "word")
             .agg(F.bit_or("w_bit").alias("bits"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"bitmap/batch={batch_id}"))
-        )
+        ), batch_id)
         b.unpersist()
 
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            X.stream_events(spark, sf_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read(sink: str) -> DataFrame:
+        merged = kmv_bottomk(
+            spark.read.parquet(os.path.join(sink, "kmv/batch=*")),
+            ["event_type"],
         )
-        q.awaitTermination()
+        ex = (
+            spark.read.parquet(os.path.join(sink, "bitmap/batch=*"))
+            .groupBy("event_type", "word")
+            .agg(F.bit_or("bits").alias("bits"))
+            .groupBy("event_type")
+            .agg(F.sum(F.bit_count("bits")).alias("n_distinct_exact"))
+        )
+        return kmv_finalize(merged, ex)
 
-    merged = kmv_bottomk(
-        spark.read.parquet(os.path.join(sink, "kmv/batch=*")),
-        ["event_type"],
-    )
-    ex = (
-        spark.read.parquet(os.path.join(sink, "bitmap/batch=*"))
-        .groupBy("event_type", "word")
-        .agg(F.bit_or("bits").alias("bits"))
-        .groupBy("event_type")
-        .agg(F.sum(F.bit_count("bits")).alias("n_distinct_exact"))
-    )
-    out = kmv_finalize(merged, ex).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _replay(X.stream_events(spark, sf_dir, max_files_per_trigger=1),
+                   read, _events_backlog_bytes(sf_dir), write)
 
 
 @query("q_stream_cdc_apply", oracle="""
@@ -871,20 +783,18 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full changelog each batch).  tests/test_streaming.py replays
     ordered micro-batches and asserts the incremental result matches
     the one-shot application exactly."""
-    state_dir = tempfile.mkdtemp(prefix="spark_graft_cdcstate_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_cdcckpt_")
-    # class G: CDC is keyed — a NULL-key change has no identity to
-    # merge on (the full-outer MERGE would never match it and each
-    # batch would accrete a fresh null row).
-    result = _run_cdc_apply(
-        spark,
-        X.stream_events(spark, sf_dir).filter(F.col('user_id').isNotNull()),
-        state_dir, ckpt,
-        backlog_bytes=_events_backlog_bytes(sf_dir))
-    out = result.localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(state_dir, ignore_errors=True)
-    return out
+    with _temp_dirs("spark_graft_cdcstate_",
+                    "spark_graft_cdcckpt_") as (state_dir, ckpt):
+        # class G: CDC is keyed — a NULL-key change has no identity to
+        # merge on (the full-outer MERGE would never match it and each
+        # batch would accrete a fresh null row).
+        return _run_cdc_apply(
+            spark,
+            X.stream_events(spark, sf_dir)
+            .filter(F.col('user_id').isNotNull()),
+            state_dir, ckpt,
+            backlog_bytes=_events_backlog_bytes(sf_dir),
+        ).localCheckpoint(eager=True)
 
 
 def _run_cdc_apply(spark: SparkSession, stream: DataFrame,
@@ -895,8 +805,6 @@ def _run_cdc_apply(spark: SparkSession, stream: DataFrame,
     Split out so the replay test can drive it with its own multi-batch
     file source (``batch_ids`` collects observed batch ids so the test
     can assert the run was genuinely incremental)."""
-    from pyspark.sql import Window
-
     version = [0]  # ping-pong snapshot pointer (driver-side, per query)
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -937,14 +845,8 @@ def _run_cdc_apply(spark: SparkSession, stream: DataFrame,
             os.path.join(state_dir, f"v{1 - version[0]}"))
         version[0] = 1 - version[0]
 
-    with _state_shuffle_scope(spark, backlog_bytes):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(spark, stream.writeStream.foreachBatch(apply_batch),
+                       ckpt, backlog_bytes)
     final = spark.read.parquet(os.path.join(state_dir, f"v{version[0]}"))
     return final.filter(F.col("op") != "delete").select(
         "user_id",
@@ -980,57 +882,33 @@ def q_stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _HW_ALPHA, _HW_BETA, _HW_GAMMA, _HW_M)
     from .stateful import hw_stateful
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_hwsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_hwckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            hw_stateful(X.stream_events(spark, sf_dir,
-                                        max_files_per_trigger=1)
-                        .filter(F.col('event_type').isNotNull()))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read(sink: str) -> DataFrame:
+        latest = _latest_snapshot(spark, sink, "event_type").filter(
+            # Series below 2m complete days never leave the init buffer
+            # and would close at n <= 2m < 2m+1 — the batch HAVING bound.
+            (F.col("n_complete") >= 2 * _HW_M)
+            & (F.col("pending_day") >= 0))
+        a, bb, g = _HW_ALPHA, _HW_BETA, _HW_GAMMA
+        y = F.col("pending_n").cast("double")
+        s1 = F.element_at("s", 1)
+        lt = a * (y - s1) + (1 - a) * (F.col("l") + F.col("b"))
+        bt = bb * (lt - F.col("l")) + (1 - bb) * F.col("b")
+        st = g * (y - lt) + (1 - g) * s1
+        s_next = F.element_at(
+            F.concat(F.slice("s", 2, _HW_M - 1), F.array(st)), 1)
+        return latest.select(
+            "event_type",
+            (F.col("n_complete") + 1).cast("long").alias("n_days"),
+            lt.alias("level"),
+            bt.alias("trend"),
+            s_next.alias("season_next"),
+            (lt + bt + s_next).alias("forecast_next"),
         )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
 
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("event_type")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        # Series below 2m complete days never leave the init buffer and
-        # would close at n <= 2m < 2m+1 — the batch HAVING bound.
-        .filter((F.col("n_complete") >= 2 * _HW_M)
-                & (F.col("pending_day") >= 0))
-    )
-    a, bb, g = _HW_ALPHA, _HW_BETA, _HW_GAMMA
-    y = F.col("pending_n").cast("double")
-    s1 = F.element_at("s", 1)
-    lt = a * (y - s1) + (1 - a) * (F.col("l") + F.col("b"))
-    bt = bb * (lt - F.col("l")) + (1 - bb) * F.col("b")
-    st = g * (y - lt) + (1 - g) * s1
-    s_next = F.element_at(
-        F.concat(F.slice("s", 2, _HW_M - 1), F.array(st)), 1)
-    out = latest.select(
-        "event_type",
-        (F.col("n_complete") + 1).cast("long").alias("n_days"),
-        lt.alias("level"),
-        bt.alias("trend"),
-        s_next.alias("season_next"),
-        (lt + bt + s_next).alias("forecast_next"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _replay(
+        hw_stateful(X.stream_events(spark, sf_dir, max_files_per_trigger=1)
+                    .filter(F.col('event_type').isNotNull())),
+        read, _events_backlog_bytes(sf_dir), output_mode="update")
 
 
 from ..operators.timeseries import q_ts_pattern_match as _pat_batch  # noqa: E402,F401
@@ -1055,42 +933,19 @@ def q_stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest batch id."""
     from .stateful import pattern_stateful
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_patsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_patckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            pattern_stateful(
-                X.stream_events(spark, sf_dir, max_files_per_trigger=1)
-                .filter(F.col("user_id").isNotNull()))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read(sink: str) -> DataFrame:
+        return (
+            _latest_snapshot(spark, sink, "user_id")
+            .filter(F.col("n_purchases") > 0)
+            .select("user_id", "n_purchases", "n_matched",
+                    (F.col("n_matched") > 0).alias("converted"))
         )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
 
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("user_id")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter(F.col("n_purchases") > 0)
-    )
-    out = latest.select(
-        "user_id", "n_purchases", "n_matched",
-        (F.col("n_matched") > 0).alias("converted"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _replay(
+        pattern_stateful(
+            X.stream_events(spark, sf_dir, max_files_per_trigger=1)
+            .filter(F.col("user_id").isNotNull())),
+        read, _events_backlog_bytes(sf_dir), output_mode="update")
 
 
 @query("q_stream_burstiness", oracle=_ORACLE["q_ts_burstiness"])
@@ -1109,49 +964,26 @@ def q_stream_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     user, each batch shuffles only its own rows on the user key."""
     from .stateful import BURST_STATE_VERSION, burstiness_stateful
 
+    def read(sink: str) -> DataFrame:
+        latest = (_latest_snapshot(spark, sink, "user_id")
+                  .filter(F.col("n_gaps") >= 2))
+        # Mirror the batch query's final expressions EXACTLY (same double
+        # ops in the same shape on the same exact inputs).
+        s1d = F.col("s1").cast("double")
+        s2d = F.col("s2").cast("decimal(38,0)").cast("double")
+        mu = s1d / F.col("n_gaps")
+        sigma = F.sqrt(s2d / F.col("n_gaps") - mu * mu)
+        return latest.select(
+            "user_id", "n_gaps", mu.alias("mean_gap_us"),
+            (F.round((sigma - mu) / (sigma + mu), 9) + 0.0)
+            .alias("burstiness"),
+        )
+
     # The state version rides the checkpoint path (stateful.py's
     # BURST_STATE_VERSION note): a schema-widening upgrade starts a fresh
     # checkpoint lineage instead of dying at state restore.
-    sink = tempfile.mkdtemp(prefix="spark_graft_burstsink_")
-    ckpt = tempfile.mkdtemp(
-        prefix=f"spark_graft_burstckpt_v{BURST_STATE_VERSION}_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            burstiness_stateful(
-                X.stream_events(spark, sf_dir, max_files_per_trigger=1))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
-
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("user_id")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter(F.col("n_gaps") >= 2)
-    )
-    # Mirror the batch query's final expressions EXACTLY (same double
-    # ops in the same shape on the same exact inputs).
-    s1d = F.col("s1").cast("double")
-    s2d = F.col("s2").cast("decimal(38,0)").cast("double")
-    mu = s1d / F.col("n_gaps")
-    sigma = F.sqrt(s2d / F.col("n_gaps") - mu * mu)
-    out = latest.select(
-        "user_id", "n_gaps", mu.alias("mean_gap_us"),
-        (F.round((sigma - mu) / (sigma + mu), 9) + 0.0)
-        .alias("burstiness"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _replay(
+        burstiness_stateful(
+            X.stream_events(spark, sf_dir, max_files_per_trigger=1)),
+        read, _events_backlog_bytes(sf_dir), output_mode="update",
+        ckpt_prefix=f"spark_graft_burstckpt_v{BURST_STATE_VERSION}_")

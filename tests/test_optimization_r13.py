@@ -22,8 +22,8 @@ from mu_swarm_logger_service_spark.streaming.queries import (
 
 
 def test_state_scope_sizes_partitions_from_backlog(spark):
-    """clamp(backlog/advisory, 1, defaultParallelism); explicit conf wins;
-    None backlog falls back to defaultParallelism; prior value restored."""
+    """clamp(backlog/advisory, 1, defaultParallelism); None backlog falls
+    back to defaultParallelism; prior value restored."""
     key = "spark.sql.shuffle.partitions"
     n_par = spark.sparkContext.defaultParallelism
     advisory = _parse_bytes(spark.conf.get(
@@ -39,13 +39,6 @@ def test_state_scope_sizes_partitions_from_backlog(spark):
 
     with _state_shuffle_scope(spark, None):  # unknown backlog
         assert spark.conf.get(key) == str(n_par)
-
-    spark.conf.set("spark.mu_swarm.stream.statePartitions", "7")
-    try:
-        with _state_shuffle_scope(spark, 1):  # explicit conf beats backlog
-            assert spark.conf.get(key) == "7"
-    finally:
-        spark.conf.unset("spark.mu_swarm.stream.statePartitions")
     assert spark.conf.get(key) == prev
 
 

@@ -1440,3 +1440,20 @@ def test_no_tokenize_inside_lambda_any_llm_query(spark, sf_dir):
                for b in lambda_bodies(plan)):
             bad.append(key)
     assert not bad, bad
+
+
+def test_streaming_queries_share_one_run_path():
+    """Every streaming-executed query starts and awaits its stream in ONE
+    place (streaming/queries.py), and partition-overwrite mode is pinned
+    per writer, never set on the shared session, anywhere in the
+    package."""
+    import pathlib
+
+    pkg = pathlib.Path(entrymod.__file__).parent / "mu_swarm_logger_service_spark"
+    src = (pkg / "streaming" / "queries.py").read_text()
+    assert src.count("awaitTermination(") == 1
+    session_set = re.compile(
+        r"conf\.set\(\s*[\"']spark\.sql\.sources\.partitionOverwriteMode")
+    offenders = [str(p.relative_to(pkg)) for p in sorted(pkg.rglob("*.py"))
+                 if session_set.search(p.read_text())]
+    assert not offenders, offenders

@@ -11,11 +11,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from mu_swarm_logger_service_spark.core.registry import QUERIES
 from mu_swarm_logger_service_spark.core.tables import load
 from mu_swarm_logger_service_spark.streaming import transforms as X
 from mu_swarm_logger_service_spark.streaming.stateful import (
@@ -68,6 +70,48 @@ def replay(spark, sf_dir):
     schema = load(spark, sf_dir, "events").schema
     yield src, schema
     shutil.rmtree(src, ignore_errors=True)
+
+
+@pytest.fixture
+def replayed(spark, replay, monkeypatch):
+    """Registered streaming queries read the 4-file ordered replay (one
+    file per trigger) instead of the one-file events stream."""
+    src, schema = replay
+    monkeypatch.setattr(X, "stream_events",
+                        lambda *args, **kwargs: _read_replay(
+                            spark, src, schema))
+
+
+def _run_counting_batches(spark, run):
+    """``run()``'s result and the number of distinct micro-batches the
+    stream it starts executed, counted by a StreamingQueryListener.  The
+    listener bus is asynchronous, so wait for the termination event: the
+    bus delivers it after all of the query's progress events."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    batches, terminated = set(), threading.Event()
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            batches.add(event.progress.batchId)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            terminated.set()
+
+    listener = _Listener()
+    spark.streams.addListener(listener)
+    try:
+        out = run()
+        assert terminated.wait(60), "no termination event from the stream"
+    finally:
+        spark.streams.removeListener(listener)
+    return out, len(batches)
 
 
 def _canon(df):
@@ -362,7 +406,6 @@ def test_rollup_upsert_is_idempotent_under_retry(spark, sf_dir):
 
     store = os.path.join(
         tempfile.gettempdir(), f"rollup_retry_{uuid.uuid4().hex[:8]}")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ev = load(spark, sf_dir, "events")
     b0 = ev.filter(F.col("event_id") % 2 == 0)
     b1 = ev.filter(F.col("event_id") % 2 == 1)
@@ -385,25 +428,75 @@ def test_rollup_upsert_is_idempotent_under_retry(spark, sf_dir):
     assert got == want
 
 
-def test_rollup_upsert_refuses_static_overwrite_mode(spark, sf_dir):
-    """Without partitionOverwriteMode=dynamic the upsert's
-    mode("overwrite") would wipe untouched day-partitions; the upsert
-    must detect the misconfigured session and refuse instead of writing."""
-    from mu_swarm_logger_service_spark.streaming.queries import rollup_upsert
+def test_rollup_upsert_keeps_untouched_days_on_static_session(spark, sf_dir):
+    """The upsert pins dynamic partition overwrite on its own writer, so a
+    session left in static mode must not let a batch that touches ONE day
+    wipe the others: every row batch 0 wrote for the untouched days
+    survives batch 1's overwrite."""
+    from mu_swarm_logger_service_spark.streaming.queries import (
+        ROLLUP_STORE_SCHEMA, rollup_upsert)
 
     store = os.path.join(
         tempfile.gettempdir(), f"rollup_static_{uuid.uuid4().hex[:8]}")
     key = "spark.sql.sources.partitionOverwriteMode"
     prior = spark.conf.get(key, "static")
     spark.conf.set(key, "static")
+    ev = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    day = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
+    want = {r.event_date: r.n for r in ev.groupBy(day.alias("event_date"))
+            .agg(F.count(F.lit(1)).alias("n")).collect()}
+    one_day = min(want)
     try:
         up = rollup_upsert(spark, store)
-        with pytest.raises(RuntimeError, match="partitionOverwriteMode"):
-            up(load(spark, sf_dir, "events").limit(10), 0)
-        assert not os.path.exists(store), "refusal must not create the store"
+        up(ev, 0)
+        up(ev.filter(day == one_day), 1)
+        got = spark.read.schema(ROLLUP_STORE_SCHEMA).parquet(store)
+
+        def per_day(batch_id):
+            return {r.event_date: r.n for r in
+                    got.filter(F.col("batch_id") == batch_id)
+                    .groupBy("event_date").agg(F.sum("n").alias("n"))
+                    .collect()}
+
+        assert len(want) > 1
+        assert per_day(0) == want   # untouched days survived
+        assert per_day(1) == {one_day: want[one_day]}
     finally:
         spark.conf.set(key, prior)
         shutil.rmtree(store, ignore_errors=True)
+
+
+def test_failed_stream_leaks_nothing(spark, sf_dir, monkeypatch):
+    """A micro-batch that raises must leave the session as it found it —
+    shuffle partitions restored, no memory-sink view left registered, no
+    temp sink or checkpoint dir left behind — on the memory-sink path
+    (q_stream_watermark) and the foreachBatch path
+    (q_stream_heavy_hitters)."""
+    from pyspark.errors import StreamingQueryException
+
+    real = X.stream_events
+    real(spark, sf_dir)  # stage the source dir before the snapshot
+
+    def poisoned(*args, **kwargs):
+        return real(*args, **kwargs).withColumn(
+            "ts", F.raise_error(F.lit("injected fault")).cast("timestamp"))
+
+    monkeypatch.setattr(X, "stream_events", poisoned)
+
+    def session_state():
+        return (
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            sorted(t.name for t in spark.catalog.listTables()
+                   if t.isTemporary),
+            sorted(n for n in os.listdir(tempfile.gettempdir())
+                   if n.startswith("spark_graft_")),
+        )
+
+    before = session_state()
+    for key in ("q_stream_watermark", "q_stream_heavy_hitters"):
+        with pytest.raises(StreamingQueryException, match="injected fault"):
+            QUERIES[key](spark, sf_dir)
+        assert session_state() == before, key
 
 
 def test_observe_metrics_surface_in_streaming_progress(spark, sf_dir):
@@ -448,7 +541,8 @@ def test_observe_metrics_surface_in_streaming_progress(spark, sf_dir):
     assert totals["n_purchase"] == expected["n_purchase"]
 
 
-def test_fingerprint_merge_across_batches_equals_batch(spark, sf_dir, replay):
+def test_fingerprint_merge_across_batches_equals_batch(
+        spark, sf_dir, replayed):
     """The incremental fingerprint's core claim, exercised with REAL
     multi-batch replay (the registered q_stream_fingerprint sees one
     micro-batch at small SF because events is one file): per-batch
@@ -460,35 +554,10 @@ def test_fingerprint_merge_across_batches_equals_batch(spark, sf_dir, replay):
         event_row_fingerprint,
     )
 
-    src, schema = replay
-    sink = tempfile.mkdtemp(prefix="fp_multi_sink_")
-    ckpt = tempfile.mkdtemp(prefix="fp_multi_ckpt_")
-    batch_ids = []
+    merged, n_batches = _run_counting_batches(
+        spark, lambda: QUERIES["q_stream_fingerprint"](spark, sf_dir))
+    assert n_batches >= 4   # genuinely incremental
 
-    def write_batch(bdf, batch_id):
-        batch_ids.append(batch_id)
-        (bdf.select(F.date_format("ts", "yyyy-MM-dd").alias("day"),
-                    event_row_fingerprint().alias("rh"))
-         .groupBy("day")
-         .agg(F.count(F.lit(1)).alias("n_part"),
-              F.sum(F.col("rh").cast("decimal(38,0)")).alias("fp_part"))
-         .write.mode("overwrite")
-         .parquet(os.path.join(sink, f"batch={batch_id}")))
-
-    q = (_read_replay(spark, src, schema)
-         .writeStream.foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert len(set(batch_ids)) >= 4   # genuinely incremental
-
-    merged = (
-        spark.read.parquet(os.path.join(sink, "batch=*"))
-        .groupBy("day")
-        .agg(F.sum("n_part").cast("long").alias("n_rows"),
-             F.sum("fp_part").cast("decimal(38,0)").cast("string")
-             .alias("fingerprint"))
-    )
     batch = (
         load(spark, sf_dir, "events")
         .select(F.date_format("ts", "yyyy-MM-dd").alias("day"),
@@ -499,58 +568,21 @@ def test_fingerprint_merge_across_batches_equals_batch(spark, sf_dir, replay):
              .cast("string").alias("fingerprint"))
     )
     assert _canon(merged) == _canon(batch)
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_heavy_hitters_state_across_batches(spark, sf_dir, replay):
+def test_heavy_hitters_state_across_batches(spark, sf_dir, replayed):
     """Streaming Misra-Gries with REAL multi-batch replay: the per-shard
     counter state must carry across 4 ordered micro-batches and the final
     merged result must equal the batch sketch EXACTLY — the replay is
     ts-ordered, so each shard folds the same item sequence either way."""
-    from mu_swarm_logger_service_spark.operators.sketches import mg_merge
-    from mu_swarm_logger_service_spark.streaming.stateful import (
-        mg_sketch_stateful,
-    )
-
-    src, schema = replay
-    sink = tempfile.mkdtemp(prefix="mg_multi_sink_")
-    ckpt = tempfile.mkdtemp(prefix="mg_multi_ckpt_")
-    batch_ids = []
-
-    def write_batch(bdf, batch_id):
-        batch_ids.append(batch_id)
-        (bdf.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .parquet(os.path.join(sink, f"batch={batch_id}")))
-
-    q = (mg_sketch_stateful(_read_replay(spark, src, schema))
-         .writeStream.outputMode("update").foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert len(set(batch_ids)) >= 4   # state really crossed triggers
-
-    from pyspark.sql import Window as W
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    from mu_swarm_logger_service_spark.streaming.stateful import (
-        MG_SNAPSHOT_SENTINEL,
-    )
-    latest = (
-        snaps.withColumn("mx", F.max("batch_id").over(W.partitionBy("shard")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter(F.col("item") != MG_SNAPSHOT_SENTINEL)
-        .select("shard", "item", "est")
-    )
-    got = mg_merge(latest)
-    from mu_swarm_logger_service_spark.core.registry import QUERIES
+    got, n_batches = _run_counting_batches(
+        spark, lambda: QUERIES["q_stream_heavy_hitters"](spark, sf_dir))
+    assert n_batches >= 4   # state really crossed triggers
     want = QUERIES["q_sketch_heavy_hitters"](spark, sf_dir)
     assert _canon(got) == _canon(want)
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_holt_state_across_batches_equals_batch(spark, sf_dir, replay):
+def test_holt_state_across_batches_equals_batch(spark, sf_dir, replayed):
     """Streaming Holt's core claim under REAL multi-batch replay (the
     registered q_stream_holt sees one micro-batch at small SF because
     events is one file): per-type (l, b, pending-hour) state carried
@@ -558,54 +590,14 @@ def test_holt_state_across_batches_equals_batch(spark, sf_dir, replay):
     boundaries stay pending and keep accumulating — then the read-time
     close of the final hour must equal the one-shot batch fold
     (q_ts_holt_trend) bit-for-bit."""
-    from mu_swarm_logger_service_spark.operators.timeseries import (
-        _HOLT_ALPHA as a, _HOLT_BETA as bb)
-    from mu_swarm_logger_service_spark.streaming.stateful import holt_stateful
-
-    src, schema = replay
-    sink = tempfile.mkdtemp(prefix="holt_multi_sink_")
-    ckpt = tempfile.mkdtemp(prefix="holt_multi_ckpt_")
-    batch_ids = []
-
-    def write_batch(bdf, batch_id):
-        batch_ids.append(batch_id)
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    q = (holt_stateful(_read_replay(spark, src, schema))
-         .writeStream.outputMode("update")
-         .foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert len(set(batch_ids)) >= 4   # genuinely incremental
-
-    from pyspark.sql import Window as W
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (snaps.withColumn(
-        "mx", F.max("batch_id").over(W.partitionBy("event_type")))
-        .filter(F.col("batch_id") == F.col("mx")))
-    y = F.col("pending_n").cast("double")
-    first = F.col("n_complete") == 0
-    level = F.when(first, y).otherwise(
-        a * y + (1 - a) * (F.col("l") + F.col("b")))
-    trend = F.when(first, F.lit(0.0)).otherwise(
-        bb * (level - F.col("l")) + (1 - bb) * F.col("b"))
-    streamed = latest.select(
-        "event_type",
-        (F.col("n_complete") + 1).cast("long").alias("n_hours"),
-        level.alias("level"), trend.alias("trend"),
-        (level + trend).alias("forecast_next"))
-
-    from mu_swarm_logger_service_spark.core.registry import QUERIES
+    streamed, n_batches = _run_counting_batches(
+        spark, lambda: QUERIES["q_stream_holt"](spark, sf_dir))
+    assert n_batches >= 4   # genuinely incremental
     batch = QUERIES["q_ts_holt_trend"](spark, sf_dir)
     assert _canon(streamed) == _canon(batch)   # bit-exact double equality
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
 
 
-def test_kmv_merge_across_batches_equals_batch(spark, sf_dir, replay):
+def test_kmv_merge_across_batches_equals_batch(spark, sf_dir, replayed):
     """The streaming KMV's core claim with REAL multi-batch replay (the
     registered q_stream_kmv sees one micro-batch at small SF): per-batch
     bottom-K partials from 4 ordered micro-batches, merged by one more
@@ -619,41 +611,10 @@ def test_kmv_merge_across_batches_equals_batch(spark, sf_dir, replay):
         kmv_priority,
     )
 
-    src, schema = replay
-    sink = tempfile.mkdtemp(prefix="kmv_multi_sink_")
-    ckpt = tempfile.mkdtemp(prefix="kmv_multi_ckpt_")
-    batch_ids = []
+    merged, n_batches = _run_counting_batches(
+        spark, lambda: QUERIES["q_stream_kmv"](spark, sf_dir))
+    assert n_batches >= 4   # genuinely incremental
 
-    def write_batch(bdf, batch_id):
-        batch_ids.append(batch_id)
-        kmv_bottomk(
-            bdf.select("event_type", kmv_priority().alias("pri")),
-            ["event_type"],
-        ).write.mode("overwrite").parquet(
-            os.path.join(sink, f"kmv/batch={batch_id}"))
-        (bdf.select("event_type",
-                    F.expr("event_id div 60").cast("long").alias("word"),
-                    F.expr("shiftleft(1L, int(event_id % 60))").alias("w_bit"))
-         .groupBy("event_type", "word")
-         .agg(F.bit_or("w_bit").alias("bits"))
-         .write.mode("overwrite")
-         .parquet(os.path.join(sink, f"bitmap/batch={batch_id}")))
-
-    q = (_read_replay(spark, src, schema)
-         .writeStream.foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert len(set(batch_ids)) >= 4   # genuinely incremental
-
-    merged = kmv_finalize(
-        kmv_bottomk(spark.read.parquet(os.path.join(sink, "kmv/batch=*")),
-                    ["event_type"]),
-        (spark.read.parquet(os.path.join(sink, "bitmap/batch=*"))
-         .groupBy("event_type", "word").agg(F.bit_or("bits").alias("bits"))
-         .groupBy("event_type")
-         .agg(F.sum(F.bit_count("bits")).alias("n_distinct_exact"))),
-    )
     ev = load(spark, sf_dir, "events")
     oneshot = kmv_finalize(
         kmv_bottomk(ev.select("event_type", kmv_priority().alias("pri")),
@@ -662,8 +623,6 @@ def test_kmv_merge_across_batches_equals_batch(spark, sf_dir, replay):
         .agg(F.count_distinct("event_id").alias("n_distinct_exact")),
     )
     assert _canon(merged) == _canon(oneshot)
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_cdc_apply_across_batches_equals_batch(spark, sf_dir, replay):
@@ -703,157 +662,46 @@ def test_cdc_apply_across_batches_equals_batch(spark, sf_dir, replay):
 
 
 def test_holt_winters_state_across_batches_equals_batch(
-        spark, sf_dir, replay):
+        spark, sf_dir, replayed):
     """Streaming Holt-Winters' core claim under REAL multi-batch replay:
     per-type (l, b, 7-slot seasonal list, init buffer, pending-day)
     state across 4 event-time-ordered micro-batches — the init fires
     mid-stream once 2m days close, days straddling batch boundaries
     stay pending — then the read-time close of the final day must equal
     the one-shot batch fold (q_ts_holt_winters) bit-for-bit."""
-    from mu_swarm_logger_service_spark.operators.timeseries import (
-        _HW_ALPHA as a, _HW_BETA as bb, _HW_GAMMA as g, _HW_M as m)
-    from mu_swarm_logger_service_spark.streaming.stateful import hw_stateful
-
-    src, schema = replay
-    sink = tempfile.mkdtemp(prefix="hw_multi_sink_")
-    ckpt = tempfile.mkdtemp(prefix="hw_multi_ckpt_")
-    batch_ids = []
-
-    def write_batch(bdf, batch_id):
-        batch_ids.append(batch_id)
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    q = (hw_stateful(_read_replay(spark, src, schema))
-         .writeStream.outputMode("update")
-         .foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert len(set(batch_ids)) >= 4   # genuinely incremental
-
-    from pyspark.sql import Window as W
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (snaps.withColumn(
-        "mx", F.max("batch_id").over(W.partitionBy("event_type")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter((F.col("n_complete") >= 2 * m)
-                & (F.col("pending_day") >= 0)))
-    y = F.col("pending_n").cast("double")
-    s1 = F.element_at("s", 1)
-    lt = a * (y - s1) + (1 - a) * (F.col("l") + F.col("b"))
-    bt = bb * (lt - F.col("l")) + (1 - bb) * F.col("b")
-    st = g * (y - lt) + (1 - g) * s1
-    s_next = F.element_at(F.concat(F.slice("s", 2, m - 1), F.array(st)), 1)
-    streamed = latest.select(
-        "event_type",
-        (F.col("n_complete") + 1).cast("long").alias("n_days"),
-        lt.alias("level"), bt.alias("trend"),
-        s_next.alias("season_next"),
-        (lt + bt + s_next).alias("forecast_next"))
-
-    from mu_swarm_logger_service_spark.core.registry import QUERIES
+    streamed, n_batches = _run_counting_batches(
+        spark, lambda: QUERIES["q_stream_holt_winters"](spark, sf_dir))
+    assert n_batches >= 4   # genuinely incremental
     batch = QUERIES["q_ts_holt_winters"](spark, sf_dir)
     assert _canon(streamed) == _canon(batch)   # bit-exact double equality
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
 
 
-def test_pattern_state_across_batches_equals_batch(spark, sf_dir, replay):
+def test_pattern_state_across_batches_equals_batch(spark, sf_dir, replayed):
     """Streaming CEP's core claim under REAL multi-batch replay: the
     four-integer per-user state (latest view, view-at-latest-click,
     counters) carried across 4 event-time-ordered micro-batches must
     reproduce the batch window rewrite (q_ts_pattern_match) exactly —
     patterns STRADDLING batch boundaries are the point (a view in batch
     1, its click in batch 2, the purchase in batch 4)."""
-    from mu_swarm_logger_service_spark.streaming.stateful import (
-        pattern_stateful)
-
-    src, schema = replay
-    sink = tempfile.mkdtemp(prefix="pat_multi_sink_")
-    ckpt = tempfile.mkdtemp(prefix="pat_multi_ckpt_")
-    batch_ids = []
-
-    def write_batch(bdf, batch_id):
-        batch_ids.append(batch_id)
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    q = (pattern_stateful(_read_replay(spark, src, schema))
-         .writeStream.outputMode("update")
-         .foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert len(set(batch_ids)) >= 4
-
-    from pyspark.sql import Window as W
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (snaps.withColumn(
-        "mx", F.max("batch_id").over(W.partitionBy("user_id")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter(F.col("n_purchases") > 0))
-    streamed = latest.select(
-        "user_id", "n_purchases", "n_matched",
-        (F.col("n_matched") > 0).alias("converted"))
-
-    from mu_swarm_logger_service_spark.core.registry import QUERIES
+    streamed, n_batches = _run_counting_batches(
+        spark, lambda: QUERIES["q_stream_pattern_match"](spark, sf_dir))
+    assert n_batches >= 4
     batch = QUERIES["q_ts_pattern_match"](spark, sf_dir)
     assert _canon(streamed) == _canon(batch)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
 
 
-def test_burstiness_state_across_batches_equals_batch(spark, sf_dir, replay):
+def test_burstiness_state_across_batches_equals_batch(
+        spark, sf_dir, replayed):
     """Arrival-moment state under REAL multi-batch replay: gaps that
     STRADDLE batch boundaries (last event of batch k → first event of
     batch k+1) must be accumulated exactly, including the Σgap²
     decimal-string carry — the merged latest snapshots must reproduce
     q_ts_burstiness bit-for-bit."""
-    from mu_swarm_logger_service_spark.streaming.stateful import (
-        burstiness_stateful)
-
-    src, schema = replay
-    sink = tempfile.mkdtemp(prefix="burst_multi_sink_")
-    ckpt = tempfile.mkdtemp(prefix="burst_multi_ckpt_")
-    batch_ids = []
-
-    def write_batch(bdf, batch_id):
-        batch_ids.append(batch_id)
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    q = (burstiness_stateful(_read_replay(spark, src, schema))
-         .writeStream.outputMode("update")
-         .foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert len(set(batch_ids)) >= 4
-
-    from pyspark.sql import Window as W
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (snaps.withColumn(
-        "mx", F.max("batch_id").over(W.partitionBy("user_id")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter(F.col("n_gaps") >= 2))
-    s1d = F.col("s1").cast("double")
-    s2d = F.col("s2").cast("decimal(38,0)").cast("double")
-    mu = s1d / F.col("n_gaps")
-    sigma = F.sqrt(s2d / F.col("n_gaps") - mu * mu)
-    streamed = latest.select(
-        "user_id", "n_gaps", mu.alias("mean_gap_us"),
-        (F.round((sigma - mu) / (sigma + mu), 9) + 0.0)
-        .alias("burstiness"))
-
-    from mu_swarm_logger_service_spark.core.registry import QUERIES
+    streamed, n_batches = _run_counting_batches(
+        spark, lambda: QUERIES["q_stream_burstiness"](spark, sf_dir))
+    assert n_batches >= 4
     batch = QUERIES["q_ts_burstiness"](spark, sf_dir)
     assert _canon(streamed) == _canon(batch)
     # a user with >= 2 gaps must exist and Σgap² must have left int64
     # somewhere at least at the decimal-string carry level
     assert streamed.count() > 0
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
